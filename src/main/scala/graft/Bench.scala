@@ -4,47 +4,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions default to the thread count (right for the gate
-    // SFs), but scale campaigns override them UP: at 1000× a sorted group
-    // that fits 24-way at 100× spills at fixed parallelism — more
-    // partitions is exactly what a real cluster adds (the
-    // dedup_span_stats lesson; partitions are the knob, not the algo)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Spark only deletes a finished query's shuffle files when the
-      // driver GC collects the plan that referenced them — default
-      // periodicGC is 30min, so a campaign of back-to-back heavy
-      // queries accumulates every predecessor's dead spill on disk
-      // (measured: 75 GB of defunct blockmgr files mid-sweep at the
-      // 1000× decade, an ENOSPC that no single query caused). Two
-      // minutes bounds the dead-file window; the explicit System.gc()
-      // between samples (below, untimed) makes the common case
-      // deterministic.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      // MASS-SCALED SHUFFLE (the r13 decade lesson): a fixed partition
-      // count is wrong at both ends — 32 partitions spill at 1000× (the
-      // pair-graph verify join moves pairs × vector-bytes; measured
-      // 2–3× super-linear residual from sort spill), while thousands of
-      // partitions waste per-exchange overhead at sf0.1. AQE right-sizes
-      // every exchange from RUNTIME map-output stats but can only
-      // coalesce DOWN from the initial count, so scale campaigns export
-      // SPARK_GRAFT_INITIAL_PARTITIONS=2048+ (the knob a 1000-executor
-      // cluster sets cluster-wide). The knob is CAMPAIGN-ONLY — no
-      // session default: the r14 per-FAMILY A/B showed even 256 taxes
-      // the two-phase sliced-scan family 1.5–2.4× per query at sf0.1
-      // (ts_lttb_bucketed 1.61→3.93 s quiet-to-quiet; the suite TOTAL
-      // hid it at "within noise") — many tiny exchanges each pay the
-      // coalesce bookkeeping while having nothing to spill. Unset or
-      // "0" means "leave the conf alone" (it is checkValue(_ > 0), so
-      // literally setting 0 would throw at session creation).
-    val spark = GraftConf.sessionDefaults(builder).getOrCreate()
+    // Spark only deletes a finished query's shuffle files when the
+    // driver GC collects the plan that referenced them — default
+    // periodicGC is 30min, so a campaign of back-to-back heavy
+    // queries accumulates every predecessor's dead spill on disk
+    // (measured: 75 GB of defunct blockmgr files mid-sweep at the
+    // 1000× decade, an ENOSPC that no single query caused). Two
+    // minutes bounds the dead-file window; the explicit System.gc()
+    // between samples (below, untimed) makes the common case
+    // deterministic.
+    val spark = GraftConf.builder()
+      .config("spark.cleaner.periodicGC.interval", "2min")
+      .getOrCreate()
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.sparkContext.setLogLevel("WARN")
     // Every remaining partition-less window in the library goes through
     // graft.Bounded.window over a frame that is ≤k rows by construction

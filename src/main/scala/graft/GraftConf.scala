@@ -2,23 +2,35 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared session-conf plumbing for the runnable mains (Bench / Verify /
-  * PairProbe / …): one place for the campaign-only knobs so an env
-  * contract fixed in one main cannot silently desync in another.
+  * PlanDump / ScaleUp / OptProbe): one builder and one place for the
+  * campaign-only knobs, so an env contract fixed in one main cannot
+  * silently desync in another.
   */
 object GraftConf {
-  /** Apply `SPARK_GRAFT_INITIAL_PARTITIONS` as AQE coalesce headroom —
-    * the mass-scaled-shuffle knob scale campaigns export (2048+ at the
-    * 100×/1000× decades, where a fixed small partition count spills).
-    * CAMPAIGN-ONLY, never a session default: the r14 per-family A/B
-    * measured even 256 as a 1.5–2.4× per-query tax on the two-phase
-    * sliced-scan family at sf0.1 (many tiny exchanges, nothing to
-    * spill). Unset or "0" leaves the conf alone — Spark's
-    * `initialPartitionNum` is checkValue(_ > 0), so passing a literal 0
-    * through would throw at session creation instead of reverting to
-    * the shuffle-partitions default.
+  /** The session every graft main starts from — each main adds only its
+    * own keys on top:
+    *  - `local[SPARK_GRAFT_CPUS]` (default 4);
+    *  - `spark.sql.shuffle.partitions = SPARK_GRAFT_SHUFFLE` (default the
+    *    thread count, right for the gate SFs). Scale campaigns override
+    *    it UP: at 1000× a sorted group that fits 24-way at 100× spills at
+    *    fixed parallelism — more partitions is exactly what a real
+    *    cluster adds (the dedup_span_stats lesson; partitions are the
+    *    knob, not the algo);
+    *  - UTC session time zone, no UI, `GraftExtensions`;
+    *  - [[sessionDefaults]].
     */
-  /** Session defaults every graft main shares, applied on top of the
-    * main's own master/shuffle settings.
+  def builder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    sessionDefaults(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
+  }
+
+  /** Session defaults every graft session shares, applied on top of the
+    * caller's own master/shuffle settings.
     *
     * codegen.cache.maxEntries (STATIC conf, so it must be set at session
     * creation): Spark's generated-class cache holds 100 entries by
@@ -29,9 +41,9 @@ object GraftConf {
     * fragments; the cost is bounded driver metaspace for class metadata.
     * This is not a local[32] tune: any long-lived session (a cluster
     * driver serving repeated queries) wants its working set of generated
-    * classes resident. SPARK_GRAFT_CODEGEN_CACHE overrides.
-    */
-  /** maxShuffledHashJoinLocalMapThreshold (AQE): lets AQE rewrite a
+    * classes resident.
+    *
+    * maxShuffledHashJoinLocalMapThreshold (AQE): lets AQE rewrite a
     * planned sort-merge join to a shuffled hash join at runtime when
     * every post-shuffle partition of the build side is under the
     * threshold — the shape of the pair-graph self-joins (band buckets,
@@ -51,27 +63,39 @@ object GraftConf {
     */
   def sessionDefaults(b: SparkSession.Builder): SparkSession.Builder =
     withInitialPartitions(b)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").map(_.trim).filter(_.nonEmpty)
-          .getOrElse("4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.get("SPARK_GRAFT_SHJ_THRESHOLD").map(_.trim).filter(_.nonEmpty)
           .getOrElse("0"))
 
-  def withInitialPartitions(b: SparkSession.Builder): SparkSession.Builder = {
-    // empty string (the `VAR= cmd` shell idiom) reads as unset, and a
-    // non-numeric value fails naming the variable instead of with a bare
-    // NumberFormatException at session startup
-    val raw = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-      .map(_.trim).filter(_.nonEmpty)
-    val n = raw.map { v =>
+  /** Apply `SPARK_GRAFT_INITIAL_PARTITIONS` as AQE coalesce headroom —
+    * the mass-scaled-shuffle knob scale campaigns export (2048+ at the
+    * 100×/1000× decades, where a fixed small partition count spills).
+    * AQE right-sizes every exchange from runtime map-output stats but can
+    * only coalesce DOWN from the initial count, so this is the knob a
+    * 1000-executor cluster sets cluster-wide.
+    * CAMPAIGN-ONLY, never a session default: the r14 per-family A/B
+    * measured even 256 as a 1.5–2.4× per-query tax on the two-phase
+    * sliced-scan family at sf0.1 (many tiny exchanges, nothing to
+    * spill).
+    */
+  def withInitialPartitions(b: SparkSession.Builder): SparkSession.Builder =
+    initialPartitions(sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")).fold(b)(n =>
+      b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString))
+
+  /** The parse behind [[withInitialPartitions]]. Unset, empty (the
+    * `VAR= cmd` shell idiom) or non-positive means "leave the conf
+    * alone" — Spark's `initialPartitionNum` is checkValue(_ > 0), so
+    * passing a literal 0 through would throw at session creation instead
+    * of reverting to the shuffle-partitions default. A non-numeric value
+    * fails naming the variable instead of with a bare
+    * NumberFormatException at session startup.
+    */
+  def initialPartitions(raw: Option[String]): Option[Int] =
+    raw.map(_.trim).filter(_.nonEmpty).map { v =>
       try v.toInt catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"SPARK_GRAFT_INITIAL_PARTITIONS must be an integer, got '$v'")
       }
-    }.getOrElse(0)
-    if (n > 0)
-      b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString)
-    else b
-  }
+    }.filter(_ > 0)
 }

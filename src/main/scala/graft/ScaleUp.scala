@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Bench-scaling dataset generator: writes an N× scale-up of a source SF
@@ -33,12 +33,7 @@ object ScaleUp {
     val copies = if (args.length > 2) args(2).toInt else 10
     val scaled: String => Boolean =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftConf.builder()
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

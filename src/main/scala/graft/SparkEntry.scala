@@ -6609,10 +6609,6 @@ object SparkEntry {
     Q6(s"$lo + ($hi - $lo) * max($idx - floor($idx))")
   }
 
-  private def CSV_MEAN_SQL(u: Int) =
-    MEAN6(s"sum(CASE WHEN user_id = $u THEN ${US6("value")} END)",
-      s"count(CASE WHEN user_id = $u THEN 1 END)")
-
   /** The four GenerateCSV stat columns for one stream (csv.go:75-104):
     * min/mean/max/count under `cond`, count null (not 0) when the stream
     * is silent in the window — mirrors TimeSeriesOps.csvExportStat.

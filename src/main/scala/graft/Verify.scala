@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,15 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args.take(2)
-    // extra args select a subset — local iteration only (the driver
-    // always passes exactly two, dumping the full suite)
+    // extra args select a subset — the fast loop when one operator is
+    // under repair, refreshing just its dirs in an existing dump; with
+    // exactly two args the full suite is dumped
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same campaign-only AQE headroom contract as Bench (see
-    // GraftConf.withInitialPartitions) so the correctness dump exercises
-    // the exact partitioning regime the bench measures — including the
-    // default regime, which sets NO initialPartitionNum
-    val spark = GraftConf.sessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
+    // the shared builder, so the correctness dump runs under the exact
+    // partitioning regime the bench measures (SPARK_GRAFT_SHUFFLE and the
+    // campaign-only AQE headroom included — and the default regime, which
+    // sets NO initialPartitionNum)
+    val spark = GraftConf.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     def rm(f: java.io.File): Unit = {
@@ -59,8 +52,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // always the FULL oracle map, even for a subset run: a subset refresh
+    // into an existing dump must not narrow what later tools/check.py
+    // runs gate
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

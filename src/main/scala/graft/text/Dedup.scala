@@ -165,10 +165,7 @@ object Dedup {
       minhashBuckets(base, numHashes, bandRows)), base), tau)
   }
 
-  /** STAGE BUILDERS for the minhash pair graph — one definition each,
-    * shared by minhashPairs and graft.text.ShardProbe, so the probe's
-    * stage decomposition measures exactly the pipeline the queries run
-    * (the Vectors.lshHashed doctrine on the text axis).
+  /** STAGE BUILDERS for the minhash pair graph, composed by minhashPairs.
     *
     * minhashBase: signatures come from the codegen'd MinHashSig
     * expression — one tight loop per document over the normalized bytes
@@ -181,7 +178,7 @@ object Dedup {
     * to executor disk at scale (the standard persist-the-signatures
     * shape of production dedup).
     */
-  private[graft] def minhashBase(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
+  private def minhashBase(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
     TextFunctions.withBase(docs)
       .select(col("doc_id"),
         TextHashes.minhashSig(col("norm"), n, numHashes).as("sig"),
@@ -199,8 +196,8 @@ object Dedup {
     * false positive), so the width is free correctness-wise and removes
     * the only quadratic term the band join has.
     */
-  private[graft] def minhashBuckets(base: DataFrame, numHashes: Int,
-                                    bandRows: Int): DataFrame = {
+  private def minhashBuckets(base: DataFrame, numHashes: Int,
+                             bandRows: Int): DataFrame = {
     val bands = (0 until numHashes / bandRows).map { b =>
       val rows = (0 until bandRows).map(r => col("sig")(b * bandRows + r))
       struct(lit(b).as("band"), xxhash64(rows: _*).as("bv"))
@@ -214,7 +211,7 @@ object Dedup {
     * key-only (16 B/row through the distinct shuffle; no payload
     * attaches before deduplication).
     */
-  private[graft] def minhashCand(buckets: DataFrame): DataFrame =
+  private def minhashCand(buckets: DataFrame): DataFrame =
     buckets.select(col("doc_id").as("id_a"), col("band"), col("bv"))
       .join(buckets.select(col("doc_id").as("id_b"), col("band"), col("bv")),
         Seq("band", "bv"))
@@ -225,7 +222,7 @@ object Dedup {
   /** The verify join-back: attach both endpoints' hashed shingle sets
     * (from the SAME materialized base pass) to each candidate pair.
     */
-  private[graft] def minhashVerifyJoin(cand: DataFrame, base: DataFrame): DataFrame = {
+  private def minhashVerifyJoin(cand: DataFrame, base: DataFrame): DataFrame = {
     val hsh = base.select(col("doc_id"), col("hs")).filter(col("hs").isNotNull)
     cand
       .join(hsh.select(col("doc_id").as("id_a"), col("hs").as("ha")), "id_a")
@@ -289,7 +286,7 @@ object Dedup {
     * the g-partitioned window, no second aggregation and no join back.
     * The earlier per-(doc,gram)-counts → df-table → join-back plan paid
     * two corpus-sized aggregations plus a sort-merge join of two
-    * Σ-position-sized sides for the SAME answer — measured by SpanProbe
+    * Σ-position-sized sides for the SAME answer — measured stage by stage
     * at the 1000× decade (235.7M positions, 224.7M distinct grams: long
     * grams are nearly all globally unique, so the "aggregates" reduced
     * nothing and the join dominated at ~388 s; shuffle-partition scaling
@@ -841,7 +838,7 @@ object Dedup {
     // without this every caller's signature expression — the mm 6-gram
     // phash in particular, the heaviest per-row scan in the mm family —
     // runs twice, once per join side (measured at the 1000× decade:
-    // ShardProbe M1 ≈ half of every heavy mm row). localCheckpoint
+    // the mm signature stage ≈ half of every heavy mm row). localCheckpoint
     // rather than cache: 16 B/row, freed with the RDD by the
     // ContextCleaner, no CacheManager entry to outlive the query (the
     // r16 verdict's №3/№5), same pattern as minhashBase.

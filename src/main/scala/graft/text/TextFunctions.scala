@@ -133,7 +133,7 @@ object TextFunctions {
       // single-code-point-class counts via the compiled byte scan —
       // value-identical to regexp_count("[^a-z0-9 ]") / ("[0-9]"), which
       // the oracle keeps; Matcher.find-per-match made the punct count
-      // alone half of corpus_shard's signal scan (ShardProbe G4)
+      // alone half of corpus_shard's signal scan (r16 stage decomposition)
       .withColumn("n_punct", punctCount)
       .withColumn("n_digit", digitCount)
       .select(
@@ -511,7 +511,7 @@ object TextFunctions {
     * row with its physical slice — RangePartitioner assigns partition
     * ids in range order, so slice order IS rank order.
     */
-  private[graft] def rangedBySlice(sized: DataFrame): DataFrame =
+  private def rangedBySlice(sized: DataFrame): DataFrame =
     sized
       .repartitionByRange(sized.sparkSession.sessionState.conf.numShufflePartitions,
         col("stratum"), col("rank_key"), col("doc_id"))
@@ -524,7 +524,7 @@ object TextFunctions {
     * frame would re-run the whole upstream scan (tokenMixture's mass
     * table rides this).
     */
-  private[graft] def sliceTokenAgg(ranged: DataFrame): DataFrame =
+  private def sliceTokenAgg(ranged: DataFrame): DataFrame =
     ranged.groupBy(col("stratum"), col("slice"))
       .agg(sum(col("n_tokens")).as("slice_tokens"))
 
@@ -993,7 +993,7 @@ object TextFunctions {
     * per-gate operators, so the oracle's per-operator replay still
     * gates every value). The previous composition normalized and
     * rescanned the corpus once per gate plus once more for the funnel's
-    * token join — 4 scans the 100× ShardProbe priced at ~2/3 of the
+    * token join — 4 scans the r16 100× stage decomposition priced at ~2/3 of the
     * whole funnel. The near-dup stage keeps its own machinery (the
     * minhash pair graph's materialized base pass).
     */

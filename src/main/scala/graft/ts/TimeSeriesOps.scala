@@ -1525,7 +1525,7 @@ object TimeSeriesOps {
     * cannot make. Phase = position within a repeating period (hour of
     * day at the defaults), pure epoch-µs integer arithmetic (the
     * seasonalProfile rule — no calendar library on either engine).
-    * Profile moments per (stream, phase) follow the streamStats recipe
+    * The profile moments per (stream, phase) follow the streamStats recipe
     * exactly (µ-unit DECIMAL sums, one deterministic float assembly);
     * phases with fewer than `minN` points never flag (one observation
     * has σ = 0 and would divide by zero or flag everything).
